@@ -774,6 +774,16 @@ object IngestQueries {
       .orderBy(col("bucket"))
   }
 
+  /** The certificate of an incremental sidecar: its live codes are
+    * SET-EQUAL to a re-encode of the whole collection under the same
+    * frozen model.
+    */
+  private def liveCodesMatchReencode(vs: graft.store.ChunkStore,
+      collection: String, mode: String): Boolean = {
+    val (codes, model) = vs.indexCodes(collection, mode)
+    graft.SparkUtil.multisetEqual(codes, model.encode(vs.read(collection)))
+  }
+
   // q242: INCREMENTAL index refresh gated — the maintenance op that
   // keeps q240's persisted index current without refitting: the model
   // stays FROZEN (refit is buildIndex, rare and deliberate), only the
@@ -832,20 +842,7 @@ object IngestQueries {
       vs.hasFreshIndex("vecs", "ivfsq"),
       "q242: refresh did not restore freshness")
     // refresh(Δ) == frozen-model full re-encode, cell for cell.
-    val meta = s.read.parquet(s"$storeRoot/vecs/_index/ivfsq_meta").head()
-    val frozen = new graft.operators.IvfSq.Model(
-      new graft.operators.Ann.Ivf(
-        meta.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](
-          "cents").map(_.toArray).toArray),
-      new graft.operators.Sq.Model(
-        meta.getAs[scala.collection.Seq[Long]]("mn").toArray,
-        meta.getAs[scala.collection.Seq[Long]]("mx").toArray))
-    val expectCodes = graft.operators.IvfSq
-      .index(vs.read("vecs"), "embedding", frozen)
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    val gotCodes = s.read.parquet(s"$storeRoot/vecs/_index/ivfsq")
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    require(graft.SparkUtil.multisetEqual(gotCodes, expectCodes),
+    require(liveCodesMatchReencode(vs, "vecs", "ivfsq"),
       "q242: refreshed codes differ from a frozen-model full re-encode")
     val queryVecs = emb.filter(col("vec_id") < 5).orderBy(col("vec_id"))
       .select(col("vec_id"), col("embedding")).collect()
@@ -871,7 +868,8 @@ object IngestQueries {
   //     re-encode of the whole MOR read (refresh over merge-on-read
   //     arbitration == full re-encode);
   // (d) COMPACT rewrites every data file but changes NO content — it
-  //     must still stale (a manifest commit), and a rebuild restores;
+  //     re-stamps the sidecars, which stay fresh and set-equal to a
+  //     full re-encode;
   // (e) VACUUM deletes historical manifests + files but commits NO
   //     manifest — the index must STAY FRESH (the snapshot-specific
   //     half: on the rename layouts this same sweep would flip the
@@ -925,30 +923,19 @@ object IngestQueries {
       vs.hasFreshIndex("vecs", "ivfsq"),
       "q251: refresh did not restore freshness on the snapshot layout")
     // (c) refresh over merge-on-read == frozen-model full re-encode.
-    val meta = s.read.parquet(s"$storeRoot/vecs/_index/ivfsq_meta").head()
-    val frozen = new graft.operators.IvfSq.Model(
-      new graft.operators.Ann.Ivf(
-        meta.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](
-          "cents").map(_.toArray).toArray),
-      new graft.operators.Sq.Model(
-        meta.getAs[scala.collection.Seq[Long]]("mn").toArray,
-        meta.getAs[scala.collection.Seq[Long]]("mx").toArray))
-    val expectCodes = graft.operators.IvfSq
-      .index(vs.read("vecs"), "embedding", frozen)
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    val gotCodes = s.read.parquet(s"$storeRoot/vecs/_index/ivfsq")
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    require(graft.SparkUtil.multisetEqual(gotCodes, expectCodes),
+    require(liveCodesMatchReencode(vs, "vecs", "ivfsq"),
       "q251: refreshed codes over MOR differ from a frozen-model " +
         "full re-encode")
     // (d) compact: every data file is rewritten, content identical —
-    // the manifest commit must stale the index anyway.
+    // the compaction re-stamps the sidecars (folding their deltas into
+    // one base), so they stay fresh and still equal a full re-encode.
     vs.compact("vecs")                                          // v4
-    require(!vs.hasFreshIndex("vecs", "lsh") &&
-      !vs.hasFreshIndex("vecs", "ivfsq"),
-      "q251: compact committed a manifest but the sidecars stayed fresh")
-    vs.buildIndex("vecs", "lsh")
-    vs.buildIndex("vecs", "ivfsq")
+    require(vs.hasFreshIndex("vecs", "lsh") &&
+      vs.hasFreshIndex("vecs", "ivfsq"),
+      "q251: compact changed no row but staled the sidecars")
+    require(liveCodesMatchReencode(vs, "vecs", "ivfsq"),
+      "q251: the sidecar folded by compact differs from a frozen-model " +
+        "full re-encode")
     // (e) vacuum: history's manifests + files go away, the LATEST
     // manifest is untouched — freshness must survive (this is exactly
     // where a census fingerprint would go stale for no reason).

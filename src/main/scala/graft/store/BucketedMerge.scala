@@ -50,7 +50,7 @@ object BucketedMerge {
   }
 
   private def tableSchema(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/_schema").schema
+    ChunkStore.storedSchema(spark, s"$dir/_schema")
 
   /** Apply one merge batch. `updates` carries the table schema plus
     * `versionCol` (monotone per key) and, if `tombstoneCol` is set, a

@@ -52,7 +52,7 @@ final class BucketedVectorStore(protected val spark: SparkSession,
     fs(p).exists(new org.apache.hadoop.fs.Path(p))
 
   private def tableSchema(dir: String) =
-    spark.read.parquet(s"$dir/_schema").schema
+    ChunkStore.storedSchema(spark, s"$dir/_schema")
 
   /** W1 on the bucketed layout: create-or-replace the incoming
     * documents' chunks. First write lays the table out (static
@@ -188,10 +188,13 @@ final class BucketedVectorStore(protected val spark: SparkSession,
     * clear), never O(documents) (VectorStore.compact's per-document
     * layout renames ~one file per document). Returns (files_before,
     * files_after): after is bounded by `nBuckets` regardless of
-    * document count — the census-independence claim q202 asserts.
+    * document count — the census-independence claim q202 asserts. The
+    * swap keeps the `_index` sidecars, and fresh ones stay fresh
+    * ([[ChunkStore.publishCompaction]]).
     */
   def compact(collection: String): (Long, Long) = {
     val dir = path(collection)
+    val fp = storeFingerprint(collection)
     val before = countDataFiles(dir)
     val tmp = dir + "__compact_tmp"
     val rows = spark.read.schema(tableSchema(dir)).parquet(dir)
@@ -200,7 +203,7 @@ final class BucketedVectorStore(protected val spark: SparkSession,
       .write.partitionBy(BucketCol).mode("overwrite").parquet(tmp)
     rows.limit(0).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/_schema")
-    ChunkStore.commitSwap(spark, dir, tmp)
+    publishCompaction(collection, tmp, fp)
     (before, countDataFiles(dir))
   }
 

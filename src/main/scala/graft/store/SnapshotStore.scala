@@ -75,7 +75,7 @@ final class SnapshotStore(protected val spark: SparkSession,
   private def dataDir(c: String) = s"${collectionPath(c)}/data"
 
   private def tableSchema(c: String): StructType =
-    spark.read.parquet(s"${collectionPath(c)}/_schema").schema
+    ChunkStore.storedSchema(spark, s"${collectionPath(c)}/_schema")
 
   // ---------------------------------------------------------------- commits
 
@@ -95,115 +95,10 @@ final class SnapshotStore(protected val spark: SparkSession,
   private[store] def readManifestJson(collection: String, v: Long): Manifest = {
     val p = new org.apache.hadoop.fs.Path(
       s"${snapshotsDir(collection)}/${manifestName(v)}")
-    val f = fs(p.toString)
-    require(f.exists(p),
+    require(fs(p.toString).exists(p),
       s"snapshot v$v of '$collection' does not exist (never committed, " +
         "or vacuumed past retention)")
-    val in = f.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-      buf.toByteArray
-    } finally in.close()
-    Manifest.fromJson(new String(bytes, "UTF-8"))
-  }
-
-  /** Publish `m` as version `m.version` — atomic create-if-absent,
-    * with a per-filesystem-class CAS primitive (returns false on a
-    * lost race; readers never observe a partially-written manifest):
-    *
-    *   - `file`: hard-link CAS (one inode op, EEXIST = lost race);
-    *   - conditional-create schemes ([[SnapshotStore.CasCreateSchemesKey]],
-    *     default `objfs` only): conditional CREATE — `create(slot,
-    *     overwrite = false)` whose bytes materialize atomically at
-    *     close and whose close fails when the slot is taken (the
-    *     `objfs` test shim models exactly those semantics; an S3
-    *     client qualifies ONLY when it issues a true
-    *     `If-None-Match: *` conditional PUT — see the key's scaladoc
-    *     for why stock S3A's plain create does not). RENAME IS NEVER
-    *     ON THIS COMMIT PATH: an object-store "rename" is a
-    *     non-atomic copy+delete, so any protocol renaming into the
-    *     slot could be observed torn — SnapshotObjectStoreSpec asserts
-    *     zero slot renames under racing writers;
-    *   - everything else (HDFS-like): stage fully, then
-    *     `FileContext.rename(Rename.NONE)` — an atomic metadata op
-    *     there, and the right choice because HDFS readers CAN observe
-    *     a file mid-write (bytes are visible before close), which
-    *     rules the conditional-create shape out.
-    */
-  private def tryPublish(collection: String, m: Manifest): Boolean = {
-    val snapDir = snapshotsDir(collection)
-    val bytes = m.toJson.getBytes("UTF-8")
-    val scheme = Option(new java.net.URI(snapDir).getScheme)
-    val casCreate = spark.sparkContext.hadoopConfiguration
-      .get(SnapshotStore.CasCreateSchemesKey, "objfs")
-      .split(',').map(_.trim).filter(_.nonEmpty).toSet
-    if (scheme.exists(casCreate)) {
-      val f = fs(snapDir)
-      f.mkdirs(new org.apache.hadoop.fs.Path(snapDir))
-      val slot = new org.apache.hadoop.fs.Path(
-        s"$snapDir/${manifestName(m.version)}")
-      try {
-        val out = f.create(slot, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else if (scheme.forall(_ == "file")) {
-      // Local filesystem: hard-link CAS. Hadoop's local FileContext is
-      // a ChecksumFs whose rename moves the `.crc` sidecar in a second
-      // non-atomic step — a losing racer can overwrite the winner's
-      // checksum (observed as ChecksumException under concurrent
-      // committers). `Files.createLink` is one inode op that atomically
-      // fails EEXIST, so the slot's bytes and its claim are the same
-      // syscall, and no checksum sidecar exists to race on.
-      val dirP = java.nio.file.Paths.get(
-        snapDir.stripPrefix("file:"), "_staged")
-      java.nio.file.Files.createDirectories(dirP)
-      val tmpP = dirP.resolve(
-        s"${java.util.UUID.randomUUID().toString.take(8)}.json")
-      java.nio.file.Files.write(tmpP, bytes)
-      val slotP = dirP.getParent.resolve(manifestName(m.version))
-      try {
-        java.nio.file.Files.createLink(slotP, tmpP)
-        java.nio.file.Files.delete(tmpP)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          java.nio.file.Files.delete(tmpP)
-          false
-      }
-    } else {
-      // HDFS-like: stage fully, then FileContext.rename with the
-      // default Rename.NONE — atomic, fails when the slot is taken
-      // (checksums are inline there, no sidecar to race). On S3,
-      // implement THIS branch as a conditional `If-None-Match` PUT;
-      // nothing else in the store changes.
-      val f = fs(snapDir)
-      f.mkdirs(new org.apache.hadoop.fs.Path(s"$snapDir/_staged"))
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$snapDir/_staged/${java.util.UUID.randomUUID().toString.take(8)}.json")
-      val out = f.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      val slot = new org.apache.hadoop.fs.Path(
-        s"$snapDir/${manifestName(m.version)}")
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new java.net.URI(snapDir), spark.sparkContext.hadoopConfiguration)
-      try {
-        fc.rename(tmp, slot)
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false)
-          false
-        case _: java.io.IOException if f.exists(slot) =>
-          f.delete(tmp, false)
-          false
-      }
-    }
+    Manifest.fromJson(ChunkStore.readText(spark, p))
   }
 
   /** The optimistic-concurrency commit loop: stage data once (the
@@ -222,7 +117,9 @@ final class SnapshotStore(protected val spark: SparkSession,
       val v = parent.map(_.version).getOrElse(0L) + 1
       val m = Manifest(v, parent.map(_.version).getOrElse(0L), op,
         rebase(parent))
-      if (tryPublish(collection, m)) return m
+      // Atomic create-if-absent of the version slot; false = lost race.
+      if (ChunkStore.tryPublish(spark, snapshotsDir(collection),
+          manifestName(m.version), m.toJson.getBytes("UTF-8"))) return m
     }
     throw new java.util.ConcurrentModificationException(
       s"snapshot commit on '$collection' lost 50 consecutive races")
@@ -293,6 +190,17 @@ final class SnapshotStore(protected val spark: SparkSession,
   def readAt(collection: String, version: Long): DataFrame =
     readManifest(collection, readManifestJson(collection, version))
 
+  /** The Δ read of an index refresh: the latest snapshot pruned to
+    * `docIds` at every scan (see [[readManifest]]).
+    */
+  override protected def readDocuments(collection: String,
+      docIds: Seq[String]): DataFrame = {
+    val v = latestVersion(collection).getOrElse(
+      throw new IllegalArgumentException(
+        s"collection '$collection' has no committed snapshot"))
+    readManifest(collection, readManifestJson(collection, v), Some(docIds))
+  }
+
   /** Merge-on-read over one manifest. Base entries are a plain scan;
     * delta/tombstone entries build a per-documentid arbitration table
     * (newest seq wins; struct max — one partial-aggregable pass) that
@@ -361,7 +269,8 @@ final class SnapshotStore(protected val spark: SparkSession,
     * old versions, until [[vacuum]]. Returns (live files before,
     * after): after is bounded by nBuckets regardless of how many
     * commits ever happened — same census independence as the bucketed
-    * layout, with a rename-free commit.
+    * layout, with a rename-free commit. An ANN sidecar that was fresh
+    * before stays fresh ([[ChunkStore.restampIndexes]]).
     */
   def compact(collection: String): (Long, Long) =
     compact(collection, () => ())
@@ -377,8 +286,9 @@ final class SnapshotStore(protected val spark: SparkSession,
       throw new IllegalArgumentException(
         s"collection '$collection' has no committed snapshot"))
     val before = liveDataFiles(collection, snapV).size.toLong
+    val snapM = readManifestJson(collection, snapV)
     val rel = s"data/${newDirName("base")}"
-    readAt(collection, snapV)
+    readManifest(collection, snapM)
       .repartition(nBuckets, col("documentid"))
       .sortWithinPartitions(col("documentid"), col("key"))
       .write.parquet(s"${collectionPath(collection)}/$rel")
@@ -402,6 +312,11 @@ final class SnapshotStore(protected val spark: SparkSession,
         Entry(rel, "base", v) +:
           parent.map(_.entries.filter(_.seq > snapV)).getOrElse(Seq.empty)
       }
+      // The sidecars survive: with no concurrent entry rebased in, the
+      // new version holds exactly snapV's rows, so a sidecar fresh at
+      // snapV is re-stamped fresh at it.
+      if (m.entries.size == 1)
+        restampIndexes(collection, fingerprintOf(snapM), fingerprintOf(m))
       (before, liveDataFiles(collection, m.version).size.toLong)
     } catch {
       case SnapshotStore.CompactionSuperseded =>
@@ -623,13 +538,14 @@ final class SnapshotStore(protected val spark: SparkSession,
     * entries, fewer historical files) must not.
     */
   override protected def storeFingerprint(collection: String): String =
-    latestVersion(collection) match {
-      case None => "empty"
-      case Some(v) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.update(readManifestJson(collection, v).toJson.getBytes("UTF-8"))
-        md.digest().map("%02x".format(_)).mkString
-    }
+    latestVersion(collection).fold("empty")(v =>
+      fingerprintOf(readManifestJson(collection, v)))
+
+  private def fingerprintOf(m: Manifest): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(m.toJson.getBytes("UTF-8"))
+    md.digest().map("%02x".format(_)).mkString
+  }
 }
 
 object SnapshotStore {

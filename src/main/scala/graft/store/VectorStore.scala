@@ -23,14 +23,15 @@ import org.apache.spark.sql.functions._
   * read-modify-write of the whole store, just the touched partitions.
   *
   * ANN serving: [[buildIndex]] persists a `_index` sidecar per mode
-  * (LSH bucket table / IVF-SQ code table + fitted-model meta, each
-  * stamped with the store's data fingerprint), and [[search]]'s ANN
-  * modes serve from the sidecar whenever it is FRESH — the reference
-  * analogue is sqlite-vec querying a PERSISTED index
+  * (LSH bucket codes / IVF-SQ codes plus a manifest holding the fitted
+  * model, stamped with the store's data fingerprint), and [[search]]'s
+  * ANN modes serve from the sidecar whenever it is FRESH — the
+  * reference analogue is sqlite-vec querying a PERSISTED index
   * (`VectorStoreCommands.cs:113`), not refitting per query. A stale
-  * sidecar (any upsert/compact since the build) is ignored, falling
-  * back to the fit-at-search convenience path; [[hasFreshIndex]] is
-  * the staleness probe the q146/q151 refresh policies hook into.
+  * sidecar (any upsert/delete since the last build or refresh) is
+  * ignored, falling back to the fit-at-search convenience path;
+  * [[hasFreshIndex]] is the staleness probe the q146/q151 refresh
+  * policies hook into.
   */
 final class VectorStore(protected val spark: SparkSession,
     protected val root: String) extends ChunkStore {
@@ -86,9 +87,8 @@ final class VectorStore(protected val spark: SparkSession,
     * via the crash-safe rename-aside commit ([[ChunkStore.commitSwap]])
     * — the layout rewrite is invisible to readers' results and
     * preserves the replace-unit (`documentid`) the upsert contract
-    * depends on. Any `_index` sidecar does not survive the swap — it
-    * would be fingerprint-stale against the rewritten files anyway;
-    * rebuilding after compaction is the q151 refresh policy's job.
+    * depends on. The swap keeps the `_index` sidecars, and fresh ones
+    * stay fresh ([[ChunkStore.publishCompaction]]).
     * At 100 TB the same rewrite runs per partition-RANGE
     * (compact only directories whose file count exceeds a threshold)
     * and also folds `maxRecordsPerFile` for file-size targets; the
@@ -98,12 +98,13 @@ final class VectorStore(protected val spark: SparkSession,
     */
   def compact(collection: String): (Long, Long) = {
     val p = path(collection)
+    val fp = storeFingerprint(collection)
     val before = countDataFiles(p)
     val tmp = p + "__compact_tmp"
     read(collection)
       .repartition(col("documentid"))
       .write.partitionBy("documentid").mode("overwrite").parquet(tmp)
-    ChunkStore.commitSwap(spark, p, tmp)
+    publishCompaction(collection, tmp, fp)
     (before, countDataFiles(p))
   }
 

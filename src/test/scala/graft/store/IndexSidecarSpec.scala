@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *     falls back to fit-at-search — never silently serving an index
   *     that is missing the newest documents;
   *   - the sidecar is invisible to the collection's own reads and its
-  *     file census.
+  *     file census;
+  *   - compaction keeps a fresh sidecar fresh (re-stamped, its deltas
+  *     folded) and a stale one stale.
   */
 class IndexSidecarSpec extends SparkSpec {
 
@@ -45,6 +47,16 @@ class IndexSidecarSpec extends SparkSpec {
     vs.upsert(rows.toDS().repartition(4), "c")
     (vs, root)
   }
+
+  /** A sidecar-served search plans a scan of the `_index` code files;
+    * the fit-at-search path reads only the collection.
+    */
+  private def servedFromSidecar(vs: ChunkStore, mode: String,
+      qv: Array[Float]): Boolean =
+    vs.search("c", graft.functions.VectorLiteralProvider.render(qv),
+        k = 5, provider = new graft.functions.VectorLiteralProvider(dim),
+        mode = mode)
+      .inputFiles.exists(_.contains("/_index/"))
 
   private def hits(vs: ChunkStore, mode: String, qv: Array[Float]) =
     vs.search("c", graft.functions.VectorLiteralProvider.render(qv),
@@ -107,7 +119,7 @@ class IndexSidecarSpec extends SparkSpec {
   test(s"[$layout] refreshIndex: frozen-model incremental refresh equals " +
       "a full re-encode and restores freshness through upserts AND deletes") {
     import spark.implicits._
-    val (vs, root) = mkStore(layout)
+    val (vs, _) = mkStore(layout)
     vs.buildIndex("c", "ivfsq")
     vs.buildIndex("c", "lsh")
     // The delta: one new document, one replaced document (fewer
@@ -126,27 +138,17 @@ class IndexSidecarSpec extends SparkSpec {
     val keys = vs.read("c").select("key").collect()
       .map(_.getString(0)).sorted.toSeq
     for (m <- Seq("ivfsq", "lsh")) {
-      val codeKeys = spark.read.parquet(s"$root/c/_index/$m")
-        .select("key").collect().map(_.getString(0)).sorted.toSeq
+      val (codes, model) = vs.indexCodes("c", m)
+      val codeKeys = codes.select("key").collect().map(_.getString(0))
+        .sorted.toSeq
       assert(codeKeys == keys, s"$m code table diverged from the " +
         s"collection: ${codeKeys.size} codes vs ${keys.size} keys")
+      // Refresh(delta) == frozen-model FULL re-encode, cell for cell.
+      val expected = model.encode(vs.read("c"))
+      assert(codes.exceptAll(expected).isEmpty &&
+        expected.exceptAll(codes).isEmpty,
+        s"refreshed $m codes differ from a frozen-model full re-encode")
     }
-    // Refresh(delta) == frozen-model FULL re-encode, cell for cell.
-    val meta = spark.read.parquet(s"$root/c/_index/ivfsq_meta").head()
-    val m = new graft.operators.IvfSq.Model(
-      new graft.operators.Ann.Ivf(
-        meta.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](
-          "cents").map(_.toArray).toArray),
-      new graft.operators.Sq.Model(
-        meta.getAs[scala.collection.Seq[Long]]("mn").toArray,
-        meta.getAs[scala.collection.Seq[Long]]("mx").toArray))
-    val expected = graft.operators.IvfSq.index(vs.read("c"), "embedding", m)
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    val got = spark.read.parquet(s"$root/c/_index/ivfsq")
-      .select(col("key"), col("ivf_cid"), col("sq_code"))
-    assert(got.exceptAll(expected).isEmpty &&
-      expected.exceptAll(got).isEmpty,
-      "refreshed codes differ from a frozen-model full re-encode")
     // The refreshed sidecar actually serves: the new document's own
     // vector finds it; the deleted document never surfaces.
     val hit = hits(vs, "ivfsq", vec(9900))
@@ -156,16 +158,45 @@ class IndexSidecarSpec extends SparkSpec {
       "deleted document resurfaced through the refreshed lsh index")
   }
 
-  test(s"[$layout] compact drops the sidecar; staleness is detected either way") {
+  test(s"[$layout] compact keeps a fresh sidecar fresh and serving") {
+    import spark.implicits._
     val (vs, _) = mkStore(layout)
     vs.buildIndex("c", "lsh")
-    assert(vs.hasFreshIndex("c", "lsh"))
+    vs.buildIndex("c", "ivfsq")
+    // A refreshed delta first, so the compaction has deltas to fold.
+    vs.upsert(Seq(EmbeddedChunk("d99:0", vec(9900), "new", "", "d99"))
+      .toDS(), "c")
+    Seq("lsh", "ivfsq").foreach(m => vs.refreshIndex("c", m, Seq("d99")))
+    val before = for (m <- Seq("lsh", "ivfsq")) yield hits(vs, m, vec(9001))
     vs.compact("c")
-    // The swap removed the sidecar dir entirely; hasFreshIndex must
-    // report false, and search must serve via fit-at-search.
+    for (m <- Seq("lsh", "ivfsq")) {
+      assert(vs.hasFreshIndex("c", m),
+        s"$m sidecar went stale although compact changed no row")
+      val (codes, model) = vs.indexCodes("c", m)
+      val expected = model.encode(vs.read("c"))
+      assert(codes.exceptAll(expected).isEmpty &&
+        expected.exceptAll(codes).isEmpty,
+        s"$m codes after compact differ from a full re-encode")
+      assert(servedFromSidecar(vs, m, vec(9001)),
+        s"$m search after compact did not read the sidecar")
+    }
+    val after = for (m <- Seq("lsh", "ivfsq")) yield hits(vs, m, vec(9001))
+    assert(after == before, "compact changed a sidecar-served answer")
+  }
+
+  test(s"[$layout] compact leaves a stale sidecar stale") {
+    import spark.implicits._
+    val (vs, _) = mkStore(layout)
+    vs.buildIndex("c", "lsh")
+    vs.upsert(Seq(EmbeddedChunk("d99:0", vec(9900), "new", "", "d99"))
+      .toDS(), "c")
+    assert(!vs.hasFreshIndex("c", "lsh"))
+    vs.compact("c")
     assert(!vs.hasFreshIndex("c", "lsh"),
-      "sidecar reported fresh after compact rewrote every file")
-    assert(hits(vs, "lsh", vec(9001)).nonEmpty)
+      "compact re-stamped a sidecar that was missing a document")
+    val got = hits(vs, "lsh", vec(9900))
+    assert(got.nonEmpty && got.head._1 == "d99:0",
+      s"fit-at-search fallback missed the newest document: $got")
   }
   }
 }
