@@ -81,35 +81,6 @@ object Bench {
       .asScala.map(_.getCollectionTime.max(0L)).sum
   }
 
-  /** Per-job wall clock, for stall attribution (same machinery as
-    * graft.Profile / ScaleStress): lets a stalled rep carry its own
-    * evidence — one long JOB means a task-level stall, jobsum ≪ wall
-    * means the gap was driver/scheduler-side between jobs.
-    */
-  private final class JobLog
-      extends org.apache.spark.scheduler.SparkListener {
-    private val starts =
-      new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    private val ends =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      starts.put(j.jobId, j.time)
-    override def onJobEnd(
-        j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val t0 = Option(starts.get(j.jobId)).getOrElse(j.time)
-      ends.put(j.jobId, (t0, j.time))
-    }
-    // A copy, not the live keySet view — the map keeps mutating.
-    def snapshot(): java.util.Set[Int] =
-      new java.util.HashSet[Int](ends.keySet())
-    def since(prev: java.util.Set[Int]): Seq[Double] = {
-      import scala.jdk.CollectionConverters._
-      ends.asScala.toSeq.filterNot(kv => prev.contains(kv._1))
-        .sortBy(_._1).map { case (_, (a, b)) => (b - a) / 1000.0 }
-    }
-  }
-
   /** Re-time the DuckDB denominators in THIS session (best effort).
     *
     * Dumps [[SparkEntry.oracleSql]] to a temp json and shells out to
@@ -209,9 +180,9 @@ object Bench {
     }
   }
 
-  /** PINNED box-calibration subset (r17): 15 batch-tier queries whose
+  /** PINNED box-calibration subset (r17): 14 batch-tier queries whose
     * implementations are stable across rounds, spanning plan shapes
-    * (scan/agg, join, window, minhash, regex text, graph CC, sketches,
+    * (scan/agg, join, window, minhash, regex text, sketches,
     * exact rank, leakage report, n-gram, span-strip, CDC, KN LM, PCA,
     * HLL) and ~15 s of r15-window wall. Their per-query medians are
     * embedded in EVERY artifact as `calib_subset`, so two rounds'
@@ -224,10 +195,10 @@ object Bench {
     */
   private val CalibSubset = Seq(
     "q01_scan_filter", "q06_join_agg_topk", "q11_window_frame",
-    "q27_minhash_lsh", "q30_regex_tokens", "q54_neardup_components",
-    "q79_profile_approx", "q86_approx_percentiles", "q97_leakage_report",
-    "q100_ngram_novelty", "q101_span_strip", "q130_cdc_dedup",
-    "q158_kneser_ney", "q178_pca_power", "q184_hll_rollup")
+    "q27_minhash_lsh", "q30_regex_tokens", "q79_profile_approx",
+    "q86_approx_percentiles", "q97_leakage_report", "q100_ngram_novelty",
+    "q101_span_strip", "q130_cdc_dedup", "q158_kneser_ney",
+    "q178_pca_power", "q184_hll_rollup")
 
   /** Same-code A/B: run `graft.Bench` in a CHILD JVM restricted to
     * [[CalibSubset]] with the given classpath (a FILE holding the
@@ -332,8 +303,7 @@ object Bench {
       spark.range(1).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }.sorted
-    val jobLog = new JobLog
-    spark.sparkContext.addSparkListener(jobLog)
+    val jobLog = new JobLog(spark.sparkContext)
     // rep > 3× the query's own rep-min AND > 1 s absolute → the rep is a
     // stall outlier; its per-job walls go into the artifact so the next
     // q85/q86-class outlier carries its own attribution row instead of a
@@ -392,7 +362,7 @@ object Bench {
       // sandbox's random multi-second scheduler stalls, which measured
       // GC=0 and move between queries on every run.
       val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val repJobs = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
+      val repJobs = scala.collection.mutable.ArrayBuffer.empty[Seq[JobLog.Job]]
       var ok = true
       def runRep(rep: Int): Unit = {
         val gc0 = gcMillis()
@@ -439,7 +409,8 @@ object Bench {
         val worstIdx = walls.indices.maxBy(walls(_))
         val worst = walls(worstIdx)
         if (worst > 3.0 * mn && worst > 1.0) {
-          val jw = repJobs(worstIdx)
+          val jobs = repJobs(worstIdx)
+          val jw = jobs.map(_.seconds)
           val jobsum = jw.sum
           // Top job walls only — enough to see WHERE the rep went; the
           // full per-job array for a 60-job query would bloat the line.
@@ -447,7 +418,7 @@ object Bench {
           stallAttrib += name -> (s"""{"rep":${worstIdx + 1},""" +
             s""""wall":${r3j(worst)},"rep_min":${r3j(mn)},""" +
             s""""njobs":${jw.size},"jobsum":${r3j(jobsum)},""" +
-            s""""driver_gap":${r3j(worst - jobsum)},""" +
+            s""""driver_gap":${r3j(worst - JobLog.busySeconds(jobs))},""" +
             s""""top_job_walls":[${top.mkString(",")}]}""")
         }
       }

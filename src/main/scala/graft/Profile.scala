@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query cost attribution for the bench-gate analysis: wall time vs
-  * Spark job structure (job count, summed job wall, largest job). Lets
-  * BASELINE.md's floor correction be MEASURED instead of asserted —
-  * `wall − jobsum` is driver-side planning/codegen/collect latency, and
+  * Spark job structure (job count, summed job wall, time covered by
+  * jobs, largest job). Lets BASELINE.md's floor correction be MEASURED
+  * instead of asserted — `wall − busy` (busy: the union of the job
+  * intervals, which overlap under AQE) is driver-side
+  * planning/codegen/collect latency, and
   * `njobs × empty-job floor` is the scheduling cost a long-lived cluster
   * amortizes but a per-query local bench pays in full.
   *
@@ -36,21 +36,7 @@ object Profile {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
-    val starts = scala.collection.mutable.Map.empty[Int, (Long, String)]
-    val jobs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        starts.synchronized {
-          val desc = j.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n'))
-            .getOrElse("?")
-          starts(j.jobId) = (j.time, desc)
-        }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.synchronized {
-          val (t0, desc) = starts.getOrElse(j.jobId, (j.time, "?"))
-          jobs += ((j.time - t0, desc))
-        }
-    })
+    val log = new JobLog(spark.sparkContext)
 
     // Empty-job floor: the fixed scheduling+codegen cost of one no-op job.
     val floorReps = (1 to 10).map { _ =>
@@ -63,24 +49,22 @@ object Profile {
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       for (rep <- 1 to 3) {
-        starts.synchronized { jobs.clear() }
+        val prev = log.snapshot()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let async listener events drain
-        val (nj, sumS, maxS) = starts.synchronized {
-          (jobs.size, jobs.map(_._1).sum / 1000.0,
-            jobs.map(_._1).maxOption.getOrElse(0L) / 1000.0)
-        }
-        println(f"$n rep$rep wall=$wall%.2f njobs=$nj jobsum=$sumS%.2f " +
-          f"maxjob=$maxS%.2f driver=${wall - sumS}%.2f")
+        val jobs = log.since(prev)
+        val secs = jobs.map(_.seconds)
+        val busy = JobLog.busySeconds(jobs)
+        println(f"$n rep$rep wall=$wall%.2f njobs=${jobs.size} " +
+          f"jobsum=${secs.sum}%.2f busy=$busy%.2f " +
+          f"maxjob=${secs.maxOption.getOrElse(0.0)}%.2f " +
+          f"driver=${wall - busy}%.2f")
         // SPARK_GRAFT_JOBDBG: per-job wall + submitting call site, last
         // rep only — which operator pays the njobs × floor tax.
         if (rep == 3 && sys.env.contains("SPARK_GRAFT_JOBDBG"))
-          starts.synchronized {
-            jobs.zipWithIndex.foreach { case ((ms, desc), i) =>
-              println(f"  job$i%3d ${ms / 1000.0}%6.2fs  $desc")
-            }
+          jobs.zipWithIndex.foreach { case (j, i) =>
+            println(f"  job$i%3d ${j.seconds}%6.2fs  ${j.name}")
           }
       }
     }

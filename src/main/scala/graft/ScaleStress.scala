@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Cdc, Dedup, IngestionPipeline, ParagraphDedup, Ranking, SpanDedup}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,26 +63,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
 
-  private final class JobLog extends SparkListener {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      starts.put(j.jobId, j.time)
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-      val t0 = Option(starts.get(j.jobId)).getOrElse(j.time)
-      jobs.put(j.jobId, (t0, j.time))
-    }
-    def snapshot(): Set[Int] = {
-      import scala.jdk.CollectionConverters._
-      jobs.keySet().asScala.toSet
-    }
-    def since(prev: Set[Int]): Seq[Double] = {
-      import scala.jdk.CollectionConverters._
-      jobs.asScala.toSeq.filterNot(kv => prev(kv._1)).sortBy(_._1)
-        .map { case (_, (a, b)) => (b - a) / 1000.0 }
-    }
-  }
-
   private def usedHeapMb(): Long = {
     System.gc()
     Thread.sleep(200)
@@ -115,8 +94,7 @@ object ScaleStress {
       .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
+    val log = new JobLog(spark.sparkContext)
     val docs0 = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val r3 = (v: Double) => math.rint(v * 1000) / 1000
@@ -126,7 +104,7 @@ object ScaleStress {
       val t0 = System.nanoTime()
       val out = body
       val wall = (System.nanoTime() - t0) / 1e9
-      val jobWalls = log.since(prev)
+      val jobWalls = log.since(prev).map(_.seconds)
       val heap = usedHeapMb()
       // Block-manager storage (checkpointed streams) — in local mode
       // these blocks share the measured JVM heap, so reporting them

@@ -67,39 +67,29 @@ object SparkUtil {
     * 2× the upstream count regardless of bytes — a kilobyte subgraph
     * arriving from a 32-partition exchange still looped at the session
     * cap. The count now derives from the checkpointed blocks' actual
-    * bytes (block-manager storage info; the eager localCheckpoint has
-    * just materialized them) at [[LoopPartitionBytes]] per partition,
-    * falling back to the r21 partition-count rule when the storage
-    * info has not surfaced. Perf-only: the loop joins/aggregates are
-    * key-deterministic, so the partition count never changes results.
+    * bytes at [[LoopPartitionBytes]] per partition, read from the block
+    * manager master, which the eager localCheckpoint's tasks updated
+    * before its job finished — no polling of the asynchronous status
+    * listener. A plan that is not a checkpoint (no stored blocks) falls
+    * back to the r21 partition-count rule. Perf-only: the loop
+    * joins/aggregates are key-deterministic, so the partition count
+    * never changes results.
     */
   private val LoopPartitionBytes = 64L << 20
   def loopPartitions(materialized: DataFrame): Int = {
     val spark = materialized.sparkSession
     val cap = spark.sessionState.conf.numShufflePartitions
-    val nParts = materialized.rdd.getNumPartitions
-    val byCount = math.max(1, math.min(cap, nParts))
-    // The checkpointed RDD rides the analyzed plan's LogicalRDD; its
-    // storage info is published by the status listener, which is
-    // asynchronous to the persist job — bounded retry, then fall back.
-    val rddId = materialized.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd.id)
-      case _ => None
+    val byCount = math.max(1, math.min(cap, materialized.rdd.getNumPartitions))
+    // The checkpointed RDD rides the analyzed plan's LogicalRDD.
+    val bytes = materialized.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.GraftBridge.rddStoredBytes(lr.rdd.id)
+      case _ => 0L
     }
-    rddId.flatMap { id =>
-      var bytes = 0L
-      var tries = 0
-      while (bytes == 0L && tries < 10) {
-        bytes = spark.sparkContext.getRDDStorageInfo
-          .find(i => i.id == id && i.numCachedPartitions > 0)
-          .map(i => i.memSize + i.diskSize).getOrElse(0L)
-        if (bytes == 0L) { Thread.sleep(20); tries += 1 }
-      }
-      if (bytes > 0L)
-        Some(math.max(1, math.min(byCount,
-          ((bytes + LoopPartitionBytes - 1) / LoopPartitionBytes).toInt)))
-      else None
-    }.getOrElse(byCount)
+    if (bytes > 0L)
+      math.max(1, math.min(byCount,
+        ((bytes + LoopPartitionBytes - 1) / LoopPartitionBytes).toInt))
+    else byCount
   }
 
   /** Multiset-equality certificate in ONE aggregate per side.

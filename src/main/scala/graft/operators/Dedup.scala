@@ -262,68 +262,65 @@ object Dedup {
     * round, so convergence is O(log diameter) — a 1000-hop chain closes
     * in ~15 rounds instead of 1000 (property-tested). Near-dup clusters
     * are shallow anyway (2-4 rounds); the doubling removes the
-    * adversarial-diameter failure mode for free. Each round is one
-    * label-table self-join (labels-sized, the small relation) + one
-    * edge join + one map-side-combinable min aggregate, fused into a
-    * SINGLE materialization (the jump reads the previous round's
-    * checkpoint, so nothing recomputes); labels are locally
-    * checkpointed once per round and lineage stays O(1).
+    * adversarial-diameter failure mode for free.
+    *
+    * Plan shape:
+    *  - only edge-touched vertices iterate: isolated vertices (most of a
+    *    corpus) can never change label, so they rejoin as
+    *    component = id after the loop and a round costs O(dup-subgraph),
+    *    not O(corpus). Touched ids absent from `vertices` keep their
+    *    labels;
+    *  - the edge table is hash-partitioned ONCE on the hop-join key
+    *    (`dst`, count scale-adaptive via
+    *    [[graft.SparkUtil.loopPartitions]]) before its checkpoint, so
+    *    at cluster scale no round re-shuffles the edges — an iteration
+    *    moves only label-sized rows;
+    *  - the first round is folded into the touched-set build:
+    *    labels₀ = min(v, min neighbor) comes out of one aggregate on
+    *    `dst`, exchange-free on that layout;
+    *  - each round is one label-sized self-join (the jump) + one
+    *    co-partitioned edge join (the hop) fused into ONE min aggregate
+    *    and one LAZY checkpoint, which the convergence witness's collect
+    *    materializes — one job per round, lineage O(1).
     *
     * Invariant (why the jump is sound): `component(v)` is always the id
     * of a vertex in v's own component and only ever decreases; jumping
     * to `component(component(v))` preserves both. At fixpoint every
     * edge has equal labels on both ends, and since the minimum vertex
     * of a component keeps its own id, the constant is the component min.
+    * The fixpoint is unique, so the answer does not depend on the
+    * partitioning or on the round count.
     */
   def connectedComponents(edges: DataFrame, vertices: DataFrame,
       maxIter: Int = 25): DataFrame = {
-    val und = edges.select(col("a").as("src"), col("b").as("dst"))
+    val und0 = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    // Iterate ONLY over edge-touched vertices: isolated vertices (the
-    // overwhelming majority of a corpus — most documents have no
-    // near-dup candidate at all) can never change label under
-    // min-propagation, so keeping them in the loop would shuffle the
-    // whole corpus once per round for nothing. They rejoin as
-    // component = id at the end, lazily. Per-round cost is now
-    // O(dup-subgraph), not O(corpus).
-    val touched = und.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
-    // LAZY checkpoints throughout the loop (r10): the convergence
-    // witness right below is always the first action on a fresh label
-    // table, so letting IT trigger the checkpoint materializes and
-    // truncates lineage in ONE job per round instead of two (an eager
-    // checkpoint job + a witness scan). On a 39-job q55 the witness
-    // jobs were pure scheduling floor; at cluster scale it is one fewer
-    // stage barrier per round.
-    var labels = touched.select(col("id"), col("id").as("component"))
+    val np = graft.SparkUtil.loopPartitions(und0)
+    val und = und0.repartition(np, col("dst")).localCheckpoint(true)
+    // touched set + first hop in ONE aggregate: the union is symmetric,
+    // so grouping on dst enumerates every touched vertex with all its
+    // neighbors as src rows; least(dst, min(src)) IS round 1 of
+    // min-label propagation from identity labels.
+    var labels = und.groupBy(col("dst"))
+      .agg(least(col("dst"), min(col("src"))).as("component"))
+      .select(col("dst").as("id"), col("component"))
       .localCheckpoint(false)
-    // Convergence witness: labels only ever DECREASE under min-propagation
-    // and the vertex set is fixed, so the label sum strictly decreases
-    // until fixpoint — equality means converged. One cheap scan of the
-    // fresh checkpoint per round instead of a join+count. (decimal(38,0)
-    // so the witness cannot overflow even at 10^12 64-bit vertex ids.)
+    // Convergence witness: labels only ever DECREASE and the vertex set
+    // is fixed, so the label sum strictly decreases until fixpoint —
+    // equality means converged. decimal(38,0) cannot overflow even at
+    // 10^12 64-bit ids; a sum over zero rows is null, i.e. converged.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val s = df.agg(sum(col("component").cast("decimal(38,0)"))).head()
-      // sum over zero rows is null — an empty vertex set is already
-      // converged, not an NPE.
       if (s.isNullAt(0)) java.math.BigDecimal.ZERO else s.getDecimal(0)
     }
     var prevSum = labelSum(labels)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      // Pointer jump FIRST, against the already-materialized label table:
-      // component := component(component). Every label IS a touched vertex
-      // id, so the self-join is total (inner-safe). Jumping before the
-      // neighbor hop (instead of after it, on a second materialization)
-      // lets the jump, the hop, and the per-vertex min fuse into ONE
-      // aggregate and ONE checkpoint per round — half the per-round jobs
-      // and half the plan churn of the jump-after shape, with the same
-      // O(log diameter) bound: labels_{k+1} = min(labels_k∘labels_k,
-      // neighbor-min(labels_k)) is the classic doubling-with-hooking
-      // recurrence, and both branches keep the invariant (labels only
-      // ever decrease, and always name a vertex in the same component).
+      // Doubling with hooking:
+      // labels_{k+1} = min(labels_k ∘ labels_k, neighbor-min(labels_k)).
+      // Every label IS a touched vertex id, so the self-join is total.
       val jumped = labels.join(
           labels.select(col("id").as("__pid"), col("component").as("__pc")),
           col("component") === col("__pid"))
@@ -341,86 +338,9 @@ object Dedup {
     }
     // Silently returning partial labels would split real duplicate
     // clusters with no signal; with pointer doubling the default
-    // maxIter=25 covers diameters past 2^25, so tripping this means
-    // something is structurally wrong, not merely a long chain.
+    // maxIter=25 covers diameters past 2^25.
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
-        "(O(log diameter) expected under pointer doubling); raise maxIter")
-    val isolated = vertices.select(col("id"))
-      .join(touched, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    labels.union(isolated)
-  }
-
-  /** [[connectedComponents]], restructured for fewer jobs per query and
-    * an exchange-free per-round edge join at scale (r22, guide §2.4 /
-    * §1.2-1). Same fixpoint, bit-identical output for ANY input (the
-    * min-label fixpoint is unique — CcFastSpec pins equality against
-    * the original on random graphs, chains, cliques and duplicate
-    * edges); q54 stays on [[connectedComponents]] because that code is
-    * part of the frozen cross-round calibration subset, while the
-    * non-calibration consumers (q55/q125/q191/q225) route here.
-    *
-    * What changed relative to the frozen loop:
-    *  - the FIRST propagation round is folded into the touched-set
-    *    build: labels₀ = min(v, min neighbor) comes out of the same
-    *    single aggregate that used to compute `distinct` ids with
-    *    identity labels, so the loop starts one hop ahead at zero extra
-    *    cost (`distinct` was already a full aggregate of the edge
-    *    table);
-    *  - the edge table is hash-partitioned ONCE on the hop-join key
-    *    (`dst`, count scale-adaptive via
-    *    [[graft.SparkUtil.loopPartitions]]) before its checkpoint, so
-    *    at cluster scale no round re-shuffles the edges — an iteration
-    *    moves only label-sized rows (the r21 LPA/PageRank discipline);
-    *    the labels₀ aggregate groups on `dst` and is itself
-    *    exchange-free on that layout.
-    */
-  def connectedComponentsFast(edges: DataFrame, vertices: DataFrame,
-      maxIter: Int = 25): DataFrame = {
-    val und0 = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    val np = graft.SparkUtil.loopPartitions(und0)
-    val und = und0.repartition(np, col("dst")).localCheckpoint(true)
-    // touched set + first hop in ONE aggregate: the union is symmetric,
-    // so grouping on dst enumerates every touched vertex with all its
-    // neighbors as src rows; least(dst, min(src)) IS round 1 of
-    // min-label propagation from identity labels.
-    var labels = und.groupBy(col("dst"))
-      .agg(least(col("dst"), min(col("src"))).as("component"))
-      .select(col("dst").as("id"), col("component"))
-      .localCheckpoint(false)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("component").cast("decimal(38,0)"))).head()
-      if (s.isNullAt(0)) java.math.BigDecimal.ZERO else s.getDecimal(0)
-    }
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // Same doubling-with-hooking recurrence as the frozen loop:
-      // labels_{k+1} = min(labels_k ∘ labels_k, neighbor-min(labels_k)),
-      // one label-sized self-join + one co-partitioned edge join fused
-      // into a single aggregate + lazy checkpoint; the convergence
-      // witness's collect materializes it (one job per round).
-      val jumped = labels.join(
-          labels.select(col("id").as("__pid"), col("component").as("__pc")),
-          col("component") === col("__pid"))
-        .select(col("id"), col("__pc").as("component"))
-      val viaNeighbors = und.join(labels, col("dst") === col("id"))
-        .select(col("src").as("id"), col("component"))
-      val next = jumped.union(viaNeighbors)
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint(false)
-      val curSum = labelSum(next)
-      labels = next
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsFast did not converge in $maxIter rounds " +
         "(O(log diameter) expected under pointer doubling); raise maxIter")
     val isolated = vertices.select(col("id"))
       .join(labels.select(col("id")), Seq("id"), "left_anti")

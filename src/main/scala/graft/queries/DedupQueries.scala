@@ -263,7 +263,7 @@ object DedupQueries {
     val exactKeep = base.groupBy(col("__h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), lit(true).as("__ke"))
-    val ndKeep = Dedup.connectedComponentsFast(lshPairs(s, dir),
+    val ndKeep = Dedup.connectedComponents(lshPairs(s, dir),
         d.select(col("doc_id").as("id")))
       .filter(col("id") === col("component"))
       .select(col("id").as("doc_id"), lit(true).as("__kn"))
@@ -316,7 +316,7 @@ object DedupQueries {
   // q55: canonical-per-cluster dedup decision — keep the longest document
   // of each component (ties → lowest id), the classic keep-best policy.
   def q55(s: SparkSession, dir: String): DataFrame = {
-    val comp = Dedup.connectedComponentsFast(lshPairs(s, dir),
+    val comp = Dedup.connectedComponents(lshPairs(s, dir),
       docs(s, dir).select(col("doc_id").as("id")))
     val withLen = comp.join(
       docs(s, dir).select(col("doc_id").as("id"),
@@ -413,7 +413,7 @@ object DedupQueries {
   // LSH pairs (q54); the report is two aggregates over the materialized
   // (id, component) table + a broadcast 1-row certificate join.
   def q125(s: SparkSession, dir: String): DataFrame = {
-    val comp = Dedup.connectedComponentsFast(lshPairs(s, dir),
+    val comp = Dedup.connectedComponents(lshPairs(s, dir),
         docs(s, dir).select(col("doc_id").as("id")))
       .localCheckpoint(true) // two consumers: split report + certificate
     val sp = comp.withColumn("split",
@@ -538,7 +538,7 @@ object DedupQueries {
           col("x.rec_id") < col("y.rec_id") &&
           levenshtein(col("x.name"), col("y.name")) <= 2)
       .select(col("x.rec_id").as("a"), col("y.rec_id").as("b"))
-    val comp = graft.operators.Dedup.connectedComponentsFast(edges,
+    val comp = graft.operators.Dedup.connectedComponents(edges,
       recs.select(col("rec_id").as("id")))
     comp.join(recs.select(col("rec_id").as("id"), col("k")), "id")
       .groupBy("component")

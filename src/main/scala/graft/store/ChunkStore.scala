@@ -1221,7 +1221,7 @@ object ChunkStore {
     * reads by forking a process per file — measured at ~5 ms a file,
     * paid on every sidecar freshness check of every ANN search.
     */
-  private def walkDataFiles(spark: org.apache.spark.sql.SparkSession,
+  private[store] def walkDataFiles(spark: org.apache.spark.sql.SparkSession,
       p: String)(f: org.apache.hadoop.fs.FileStatus => Unit): Unit = {
     val fs = fsOf(spark, p)
     def walk(dir: org.apache.hadoop.fs.Path): Unit =

@@ -68,9 +68,6 @@ final class SnapshotStore(protected val spark: SparkSession,
 
   import SnapshotStore._
 
-  private def fs(p: String) = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-
   private def snapshotsDir(c: String) = s"${collectionPath(c)}/_snapshots"
   private def dataDir(c: String) = s"${collectionPath(c)}/data"
 
@@ -82,7 +79,7 @@ final class SnapshotStore(protected val spark: SparkSession,
   /** All committed versions, ascending — one driver-side listing. */
   def versions(collection: String): Seq[Long] = {
     val d = snapshotsDir(collection)
-    val f = fs(d)
+    val f = ChunkStore.fsOf(spark, d)
     val p = new org.apache.hadoop.fs.Path(d)
     if (!f.exists(p)) return Seq.empty
     f.listStatus(p).map(_.getPath.getName)
@@ -95,7 +92,7 @@ final class SnapshotStore(protected val spark: SparkSession,
   private[store] def readManifestJson(collection: String, v: Long): Manifest = {
     val p = new org.apache.hadoop.fs.Path(
       s"${snapshotsDir(collection)}/${manifestName(v)}")
-    require(fs(p.toString).exists(p),
+    require(ChunkStore.fsOf(spark, p.toString).exists(p),
       s"snapshot v$v of '$collection' does not exist (never committed, " +
         "or vacuumed past retention)")
     Manifest.fromJson(ChunkStore.readText(spark, p))
@@ -136,7 +133,7 @@ final class SnapshotStore(protected val spark: SparkSession,
     */
   def upsert(chunks: Dataset[EmbeddedChunk], collection: String): Unit = {
     val cdir = collectionPath(collection)
-    val f = fs(cdir)
+    val f = ChunkStore.fsOf(spark, cdir)
     val schemaDir = new org.apache.hadoop.fs.Path(s"$cdir/_schema")
     if (!f.exists(schemaDir))
       chunks.toDF().limit(0).coalesce(1)
@@ -455,14 +452,9 @@ final class SnapshotStore(protected val spark: SparkSession,
     val m = readManifestJson(collection, version)
     val cdir = collectionPath(collection)
     m.entries.flatMap { e =>
-      val f = fs(cdir)
-      val it = f.listFiles(
-        new org.apache.hadoop.fs.Path(s"$cdir/${e.path}"), true)
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out += s"${e.path}/${st.getPath.getName}"
+      ChunkStore.walkDataFiles(spark, s"$cdir/${e.path}") { st =>
+        out += s"${e.path}/${st.getPath.getName}"
       }
       out
     }
@@ -505,7 +497,7 @@ final class SnapshotStore(protected val spark: SparkSession,
       .flatMap(v => readManifestJson(collection, v).entries.map(_.path))
       .toSet
     val cdir = collectionPath(collection)
-    val f = fs(cdir)
+    val f = ChunkStore.fsOf(spark, cdir)
     // Drop aged-out manifests first: once a version is gone, readers
     // can no longer pin its files, so the file sweep below is safe.
     all.dropRight(retainLast).foreach { v =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def apply[T](spark: SparkSession)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
+    org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
     val n = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -18,7 +18,7 @@ object JobCount {
     sc.addSparkListener(listener)
     try {
       val r = body
-      org.apache.spark.ListenerBusDrain(sc)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
       (r, n.get)
     } finally sc.removeSparkListener(listener)
   }

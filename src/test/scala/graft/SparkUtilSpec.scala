@@ -61,6 +61,24 @@ class SparkUtilSpec extends SparkSpec {
     } finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
   }
 
+  test("loopPartitions reads a fresh checkpoint's bytes at once, without " +
+      "polling") {
+    // Kilobytes over 8 partitions: the bytes rule gives 1 partition, the
+    // partition-count fallback min(shuffle partitions, 8) = 4 — so 1
+    // shows the bytes were read right after the checkpoint.
+    val und = spark.range(0, 2000)
+      .selectExpr("id AS src", "id % 50 AS dst")
+      .repartition(8).localCheckpoint(true)
+    val t0 = System.nanoTime()
+    val counts = (1 to 5).map(_ => SparkUtil.loopPartitions(und))
+    val perCallMs = (System.nanoTime() - t0) / 1e6 / 5
+    assert(counts.distinct == Seq(1), counts)
+    // One retry sleep of the polling rule was 20 ms.
+    assert(perCallMs < 20, f"$perCallMs%.1f ms per call")
+    // No stored blocks (not a checkpoint): the partition-count rule.
+    assert(SparkUtil.loopPartitions(spark.range(0, 100, 1, 3).toDF()) == 3)
+  }
+
   test("ensureParallelism raises split-sparse input to default parallelism") {
     val one = spark.range(1000).coalesce(1)
     assert(one.rdd.getNumPartitions == 1)

@@ -68,6 +68,14 @@ class DedupTextSpec extends SparkSpec {
       "every path vertex must label to the minimum id 0")
   }
 
+  test("connected components: too few rounds throws instead of partial labels") {
+    val edges = (0L until 999L).map(i => (i, i + 1)).toDF("a", "b")
+    val verts = (0L to 999L).toDF("id")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(edges, verts, maxIter = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"))
+  }
+
   test("connected components match driver union-find on a random graph") {
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(150)(

@@ -1,7 +1,9 @@
 package graft.store
 
 import graft.{JobCount, SparkSpec}
-import graft.model.EmbeddedChunk
+import graft.model.{ElementRow, EmbeddedChunk}
+import graft.operators.IngestionPipeline
+import graft.sources.DatabaseSource
 import org.apache.spark.sql.functions._
 
 /** Job counts of the store's read and index-maintenance paths — the
@@ -15,7 +17,9 @@ import org.apache.spark.sql.functions._
   *   - a compaction re-stamps the sidecars itself, leaving the
   *     follow-up empty refresh nothing to do;
   *   - the first sidecar search after a refresh reloads the serving memo
-  *     without a job of its own.
+  *     without a job of its own;
+  *   - a one-source ingestion write plans as a plain pipeline: no tag
+  *     join, no collision pass, no extra checkpoint.
   */
 class StoreJobCountSpec extends SparkSpec {
 
@@ -92,5 +96,82 @@ class StoreJobCountSpec extends SparkSpec {
     assert(restampJobs == 0,
       s"the post-compaction re-stamp launched $restampJobs jobs")
     assert(Seq("lsh", "ivfsq").forall(vs.hasFreshIndex("c", _)))
+  }
+
+  // ---- the ingestion pipeline -------------------------------------------
+
+  private def articles(ids: Range, rev: Int): Seq[(Long, String, String)] =
+    ids.map { i =>
+      (i.toLong, s"Report $i", Seq.tabulate(3) { p =>
+        s"Paragraph $p of report $i, revision $rev, is about topic " +
+          s"${(i * 7 + p) % 5} and says a few more words about it."
+      }.mkString("\n"))
+    }
+
+  private def elements(rows: Seq[(Long, String, String)]) = {
+    import spark.implicits._
+    DatabaseSource.elements(rows.toDF("id", "title", "body"))
+  }
+
+  /** Jobs of a one-source 10-document revision write (results collected,
+    * as a client does), measured before `run` and `runTagged` shared one
+    * body: a one-source call must still plan like a plain pipeline.
+    */
+  private val oneSourceWriteJobs = Map("snapshot" -> 12, "bucketed" -> 18)
+
+  for (layout <- Seq("snapshot", "bucketed"))
+    test(s"[$layout] a one-source 10-document write launches at most " +
+        s"${oneSourceWriteJobs(layout)} jobs") {
+      val vs = newStore(layout)
+      IngestionPipeline.run(elements(articles(0 until 40, 0)), vs, "c")
+        .collect()
+      val (res, jobs) = JobCount(spark)(IngestionPipeline.run(
+        elements(articles(0 until 10, 1)), vs, "c").collect())
+      info(s"write jobs: $jobs")
+      assert(res.length == 10 && res.forall(r => r.succeeded && r.n_chunks > 0))
+      assert(jobs <= oneSourceWriteJobs(layout),
+        s"the write launched $jobs jobs")
+    }
+
+  test("[snapshot] runTagged over two sources gives the results and store " +
+      "rows of one run per source") {
+    import spark.implicits._
+    val failed = Seq(ElementRow("Broken #1", Seq(0), None, 0, "error", None,
+      Some("parse failed"), None, None, None, None, None, None)).toDS()
+    val sources = Seq(
+      "x" -> (() => elements(articles(0 until 6, 0))),
+      "y" -> (() => elements(articles(100 until 104, 0)).union(failed)))
+    val tagged = newStore("snapshot")
+    val perSource = newStore("snapshot")
+    val got = IngestionPipeline.runTagged(
+        sources.map { case (t, els) => t -> els() }, tagged, t => s"c_$t")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2),
+        r.getLong(3), Option(r.getString(4)))).toSet
+    val want = sources.flatMap { case (t, els) =>
+      IngestionPipeline.run(els(), perSource, s"c_$t").collect()
+        .map(r => (t, r.documentid, r.succeeded, r.n_chunks, r.error))
+    }.toSet
+    assert(got == want)
+    assert(got.size == 11 && got.count(!_._3) == 1)
+    def rows(vs: ChunkStore, c: String) = vs.read(c)
+      .select(col("key"), col("content"), col("context"), col("documentid"),
+        col("embedding")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getSeq[Float](4))).toSet
+    for (t <- Seq("x", "y"))
+      assert(rows(tagged, s"c_$t") == rows(perSource, s"c_$t"), t)
+  }
+
+  test("[snapshot] two sources sharing a doc_id fail before any write") {
+    val vs = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("jobcount-spec").toString,
+      nBuckets = 4)
+    val e = intercept[Exception](IngestionPipeline.runTagged(
+      Seq("x" -> elements(articles(0 until 3, 0)),
+        "y" -> elements(articles(2 until 5, 1))), vs, t => s"c_$t"))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("under multiple sources")), e)
+    assert(Seq("c_x", "c_y").forall(vs.versions(_).isEmpty))
   }
 }
