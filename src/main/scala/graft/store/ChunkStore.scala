@@ -97,7 +97,8 @@ trait ChunkStore {
   // them, and a manifest is published as version N+1 of the one it was
   // derived from through [[ChunkStore.tryPublish]] — the snapshot
   // layout's create-if-absent CAS. A crash before the publish leaves
-  // file groups no manifest names (never read, and not swept); a writer
+  // file groups no manifest names (never read; the snapshot layout's
+  // vacuum sweeps them, [[sweepSidecars]]); a writer
   // that loses the race deletes its files and the winner's manifest
   // stands. Readers take the highest
   // version, so every state a reader can see names complete files
@@ -197,12 +198,9 @@ trait ChunkStore {
     val dir = sidecarDir(collection, sc.model.mode)
     val codes = spark.read.schema(sc.schema)
       .parquet(sc.groups.map(g => s"$dir/${g.path}"): _*)
-    sc.groups.zipWithIndex.flatMap { case (g, i) =>
-      val shadowed = sc.deltas.drop(i).flatMap(_.replaces).distinct
-      if (shadowed.isEmpty) None
-      else Some(!(col("documentid").isin(shadowed: _*) &&
-        col("_metadata.file_path").contains(s"/${g.path}/")))
-    }.reduceOption(_ && _).fold(codes)(codes.filter)
+    ChunkStore.dropShadowed(codes, sc.groups.zipWithIndex.map {
+      case (g, i) => g.path -> sc.deltas.drop(i).flatMap(_.replaces).distinct
+    })
   }
 
   /** `load` memoized under `key` while `token` stays the same. */
@@ -792,6 +790,31 @@ trait ChunkStore {
     won
   }
 
+  /** Delete the sidecar file groups that the latest manifest of their
+    * mode does not name and that are at least `minAgeMs` old — what a
+    * build or refresh that crashed before its publish leaves behind.
+    * The groups are listed BEFORE the manifest is read, so a group a
+    * concurrent writer publishes meanwhile is either named by the
+    * manifest read or was written after the listing began — inside the
+    * grace window, like a snapshot data dir. Returns the groups deleted.
+    */
+  protected final def sweepSidecars(collection: String,
+      minAgeMs: Long): Long = ChunkStore.IndexModes.map { mode =>
+    val dir = sidecarDir(collection, mode)
+    val f = ChunkStore.fsOf(spark, dir)
+    val now = System.currentTimeMillis()
+    val groups =
+      try f.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq.filter(st =>
+        st.isDirectory && Seq("base-", "delta-").exists(
+          st.getPath.getName.startsWith))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val named = ChunkStore.latestSidecar(spark, dir).toSeq
+      .flatMap(_.groups.map(_.path)).toSet
+    groups.count(st => !named(st.getPath.getName) &&
+      now - st.getModificationTime >= minAgeMs &&
+      f.delete(st.getPath, true)).toLong
+  }.sum
+
   /** A compaction moves rows without changing any, so each sidecar that
     * was fresh over the rows before it (stamped `before`) is re-stamped
     * fresh for the rewritten files (`after`), its deltas folded into a
@@ -1050,6 +1073,27 @@ object ChunkStore {
     fsOf(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName).toSeq
+
+  /** `df` without each file group's shadowed documents: one literal
+    * `NOT (documentid IN (…) AND _metadata.file_path contains
+    * "/<group>/")` conjunct per group that shadows any — no join, no
+    * job. The merge-on-read of the ANN sidecars' live codes and of the
+    * snapshot layout's data files.
+    */
+  private[store] def dropShadowed(df: DataFrame,
+      shadowed: Seq[(String, Seq[String])]): DataFrame =
+    shadowed.collect { case (g, ids) if ids.nonEmpty =>
+      !(col("documentid").isin(ids: _*) &&
+        col("_metadata.file_path").contains(s"/$g/"))
+    }.reduceOption(_ && _).fold(df)(df.filter)
+
+  /** The parquet schema of one file, from its footer on the driver. */
+  private[store] def parquetSchema(spark: SparkSession,
+      st: org.apache.hadoop.fs.FileStatus)
+      : org.apache.parquet.schema.MessageType = {
+    val r = footer(spark, st)
+    try r.getFileMetaData.getSchema finally r.close()
+  }
 
   private def footer(spark: SparkSession,
       st: org.apache.hadoop.fs.FileStatus) =

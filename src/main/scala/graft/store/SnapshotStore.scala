@@ -26,10 +26,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     before manifest visible".
   *   - **The commit is ONE atomic file creation.** State version N is
   *     the manifest `_snapshots/v%08dN.json` — the list of (data dir,
-  *     kind, seq) entries that ARE version N. Publishing = creating
-  *     that file if-absent (Hadoop `FileContext.rename(…, Rename.NONE)`
-  *     over a staged temp — fails if vN exists; on S3 the same slot is
-  *     a conditional `If-None-Match` PUT). Readers see the old version
+  *     kind, seq, mentioned documentids) entries that ARE version N.
+  *     Publishing = creating that file if-absent (Hadoop
+  *     `FileContext.rename(…, Rename.NONE)` over a staged temp — fails
+  *     if vN exists; on S3 the same slot is a conditional
+  *     `If-None-Match` PUT). Readers see the old version
   *     or the new one, never anything between.
   *   - **Concurrent writers are SAFE, not corrupting.** Two committers
   *     race for the same version slot; exactly one file creation
@@ -47,16 +48,26 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Replace-by-document on immutable files is MERGE-ON-READ: an upsert
   * appends its batch as a `delta` entry (cost O(batch) — no read-back,
   * no shuffle, the cheap-write side of the LSM trade-off); a delete
-  * appends a `tombstone` entry (just the documentids). A read
-  * arbitrates per documentid by entry seq — newest mention wins, a
-  * tombstone winner drops the document, and base files are shadowed by
-  * ANY delta mention (replace semantics: a document's chunks always
-  * come wholly from one entry). The arbitration table is
-  * O(delta-mentioned documents), not O(store): after [[compact]]
-  * (copy-on-write: rewrite live rows into nBuckets base files, commit
-  * a manifest with that single entry) reads are a plain scan again.
-  * The LSM ledger at 100 TB: commits stay O(batch) all day, reads pay
-  * a delta-sized arbitration that compaction resets on schedule.
+  * appends a `tombstone` entry (just the documentids). Each delta and
+  * tombstone entry also records the sorted documentids it mentions
+  * (up to [[SnapshotStore.DiffPushdownCapKey]] of them — the delete
+  * has them in hand, the upsert reads its new files' documentid column
+  * on the driver). A read keeps, per documentid, the rows of the
+  * newest entry that mentions it: base files are shadowed by ANY delta
+  * or tombstone mention, a delta by the mentions of later entries, and
+  * a tombstone contributes no rows (replace semantics: a document's
+  * chunks always come wholly from one entry). With every entry's ids
+  * in the manifest, the winners are worked out on the driver and the
+  * read is ONE parquet scan of base ∪ deltas with a literal
+  * per-file-group filter — no aggregate, no join, no shuffle, the same
+  * plan shape as the ANN sidecar's live codes. An entry past the cap,
+  * or a manifest written before entries carried ids, falls back to a
+  * shuffle arbitration that is O(delta-mentioned documents), not
+  * O(store). After [[compact]] (copy-on-write: rewrite live rows into
+  * nBuckets base files, commit a manifest with that single entry)
+  * reads are a plain scan again. The LSM ledger at 100 TB: commits
+  * stay O(batch) all day, reads pay a delta-sized filter that
+  * compaction resets on schedule.
   *
   * The reference's store commits row-at-a-time inside one SQLite
   * transaction (`VectorStoreCommands.cs:159`) — single-writer ACID the
@@ -127,9 +138,11 @@ final class SnapshotStore(protected val spark: SparkSession,
   /** W1: append the batch as an immutable delta (or the first base).
     * Cost O(batch): one parquet write of the incoming rows straight out
     * of their upstream tasks — no read-back of existing data, no
-    * shuffle, no renames of any existing file — plus the one-file
-    * manifest CAS. Replace-by-document holds at READ time (newest seq
-    * wins per documentid), not by rewriting the replaced rows here.
+    * shuffle, no renames of any existing file — plus, for a delta, a
+    * driver-side read of the new files' documentid column (no job) for
+    * its manifest entry, and the one-file manifest CAS.
+    * Replace-by-document holds at READ time (newest seq wins per
+    * documentid), not by rewriting the replaced rows here.
     */
   def upsert(chunks: Dataset[EmbeddedChunk], collection: String): Unit = {
     val cdir = collectionPath(collection)
@@ -140,10 +153,11 @@ final class SnapshotStore(protected val spark: SparkSession,
         .write.mode("overwrite").parquet(schemaDir.toString)
     val rel = s"data/${newDirName("delta")}"
     chunks.toDF().write.parquet(s"$cdir/$rel")
+    lazy val ids = documentIds(s"$cdir/$rel")
     commit(collection, "upsert") { parent =>
       val v = parent.map(_.version).getOrElse(0L) + 1
-      val kind = if (parent.isEmpty) "base" else "delta"
-      parent.map(_.entries).getOrElse(Seq.empty) :+ Entry(rel, kind, v)
+      parent.fold(Seq(Entry(rel, "base", v)))(
+        _.entries :+ Entry(rel, "delta", v, ids))
     }
   }
 
@@ -163,11 +177,47 @@ final class SnapshotStore(protected val spark: SparkSession,
     spark.createDataset(docIds.distinct)(Encoders.STRING)
       .toDF("documentid").coalesce(1)
       .write.parquet(s"${collectionPath(collection)}/$rel")
+    val ids = Some(docIds.distinct.sorted).filter(_.size <= pushdownCap)
     commit(collection, "delete") { parent =>
       val v = parent.map(_.version).getOrElse(0L) + 1
       parent.map(_.entries).getOrElse(Seq.empty) :+
-        Entry(rel, "tombstone", v)
+        Entry(rel, "tombstone", v, ids)
     }
+  }
+
+  private def pushdownCap: Int =
+    spark.conf.get(DiffPushdownCapKey, "1000").toInt
+
+  /** The sorted distinct documentids of the parquet files in `dir`, read
+    * on the driver through a one-column projection (no Spark job); None
+    * once they number more than [[pushdownCap]] — the read stops there.
+    */
+  private def documentIds(dir: String): Option[Seq[String]] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.api.ReadSupport
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val cap = pushdownCap
+    val ids = scala.collection.mutable.TreeSet.empty[String]
+    val files = ChunkStore.parquetFiles(spark, dir).iterator
+    while (ids.size <= cap && files.hasNext) {
+      val st = files.next()
+      val conf = new org.apache.hadoop.conf.Configuration(
+        spark.sparkContext.hadoopConfiguration)
+      val fileSchema = ChunkStore.parquetSchema(spark, st)
+      conf.set(ReadSupport.PARQUET_READ_SCHEMA,
+        new org.apache.parquet.schema.MessageType("documentids",
+          fileSchema.getType(fileSchema.getFieldIndex("documentid"))).toString)
+      val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+        .withConf(conf).build()
+      try {
+        var g = r.read()
+        while (g != null && ids.size <= cap) {
+          if (g.getFieldRepetitionCount(0) > 0) ids += g.getString(0, 0)
+          g = r.read()
+        }
+      } finally r.close()
+    }
+    Some(ids.toSeq).filter(_.size <= cap)
   }
 
   /** Schema-on-read of the LATEST snapshot. */
@@ -198,14 +248,21 @@ final class SnapshotStore(protected val spark: SparkSession,
     readManifest(collection, readManifestJson(collection, v), Some(docIds))
   }
 
-  /** Merge-on-read over one manifest. Base entries are a plain scan;
-    * delta/tombstone entries build a per-documentid arbitration table
-    * (newest seq wins; struct max — one partial-aggregable pass) that
-    * is O(delta-mentioned documents), NEVER O(store): base rows join
-    * it anti (any mention shadows the whole document — replace
-    * semantics), delta rows keep only their winning seq's rows, a
-    * tombstone winner drops the document everywhere. With no deltas
-    * (post-compact) the arbitration disappears entirely.
+  /** Merge-on-read over one manifest (the rules in the class doc).
+    * Base entries alone are a plain scan. When every delta and
+    * tombstone entry carries its documentids, the winners are decided
+    * here on the driver: base and delta files are read in ONE scan
+    * whose literal per-file-group filter
+    * ([[ChunkStore.dropShadowed]]) drops each group's shadowed
+    * documents — a base group's by every mention, a delta's by the
+    * mentions of later entries — and tombstone files are not read at
+    * all. Otherwise (an entry past the cap, or a manifest written
+    * before entries carried ids) the mentions build a per-documentid
+    * arbitration table (newest seq wins; struct max — one
+    * partial-aggregable pass), O(delta-mentioned documents), never
+    * O(store): base rows join it anti, delta rows keep only their
+    * winning seq's rows, a tombstone winner drops the document
+    * everywhere.
     */
   private def readManifest(collection: String, m: Manifest,
       docIds: Option[Seq[String]] = None): DataFrame = {
@@ -219,19 +276,26 @@ final class SnapshotStore(protected val spark: SparkSession,
     // an IN probe of d ids touches ~d row groups, not the store.
     def prune(df: DataFrame): DataFrame =
       docIds.fold(df)(ids => df.filter(col("documentid").isin(ids: _*)))
-    def dataDf(paths: Seq[String]) =
-      prune(spark.read.schema(sch).parquet(paths.map(p => s"$cdir/$p"): _*))
+    def dataDf(es: Seq[Entry]) =
+      if (es.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+      else prune(spark.read.schema(sch)
+        .parquet(es.map(e => s"$cdir/${e.path}"): _*))
     val bases = m.entries.filter(_.kind == "base")
     val deltas = m.entries.filter(_.kind == "delta")
     val tombs = m.entries.filter(_.kind == "tombstone")
-    val base =
-      if (bases.nonEmpty) dataDf(bases.map(_.path))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    if (deltas.isEmpty && tombs.isEmpty) return base
+    val mentions = deltas ++ tombs
+    if (mentions.isEmpty) return dataDf(bases)
+    if (mentions.forall(_.ids.isDefined)) {
+      val scanned = bases ++ deltas
+      return ChunkStore.dropShadowed(dataDf(scanned), scanned.map { e =>
+        e.path -> mentions.filter(o => e.kind == "base" || o.seq > e.seq)
+          .flatMap(_.ids.get).distinct
+      })
+    }
     val tombSchema = StructType(Seq(StructField("documentid", StringType)))
-    val mentions = (deltas.map(e =>
-        dataDf(Seq(e.path)).select(col("documentid"))
+    val mentionDf = (deltas.map(e =>
+        dataDf(Seq(e)).select(col("documentid"))
           .withColumn("__seq", lit(e.seq))
           .withColumn("__tomb", lit(false))) ++
       tombs.map(e =>
@@ -239,18 +303,18 @@ final class SnapshotStore(protected val spark: SparkSession,
           .withColumn("__seq", lit(e.seq))
           .withColumn("__tomb", lit(true))))
       .reduce(_ unionByName _)
-    val arb = mentions.groupBy(col("documentid"))
+    val arb = mentionDf.groupBy(col("documentid"))
       .agg(max(struct(col("__seq"), col("__tomb"))).as("__w"))
       .select(col("documentid"), col("__w.__seq").as("__wseq"),
         col("__w.__tomb").as("__wtomb"))
     val deltaRows = deltas.map(e =>
-        dataDf(Seq(e.path)).withColumn("__seq", lit(e.seq)))
+        dataDf(Seq(e)).withColumn("__seq", lit(e.seq)))
       .reduceOption(_ unionByName _)
     val liveDelta = deltaRows.map(_
         .join(arb.filter(!col("__wtomb")), Seq("documentid"))
         .filter(col("__seq") === col("__wseq"))
         .select(sch.fieldNames.map(col): _*))
-    val liveBase = base
+    val liveBase = dataDf(bases)
       .join(arb.select(col("documentid")), Seq("documentid"), "left_anti")
       .select(sch.fieldNames.map(col): _*)
     liveDelta.fold(liveBase)(liveBase.unionByName(_))
@@ -339,12 +403,15 @@ final class SnapshotStore(protected val spark: SparkSession,
     *   - **manifest-pruned fast path** (no compaction in (fromV, toV]):
     *     data files are immutable and MOR arbitration is monotone in
     *     seq, so ONLY documents mentioned by entries committed in the
-    *     window can differ. The touched set comes from the new delta/
-    *     tombstone files' documentid columns (column-pruned scans of
-    *     the WINDOW's data only), and both versions are read restricted
-    *     to it — a literal IN filter pushed into every data-file scan
-    *     when the set is small ([[SnapshotStore.DiffPushdownCapKey]],
-    *     row-group-pruned on a compacted base), else a semi-join —
+    *     window can differ. The touched set is the union of the
+    *     window's entries' recorded documentids when every entry
+    *     carries them and the union fits under the cap (no job), else
+    *     it comes from the new delta/tombstone files' documentid
+    *     columns (column-pruned scans of the WINDOW's data only), and
+    *     both versions are read restricted to it — a literal IN filter
+    *     pushed into every data-file scan when the set is small
+    *     ([[SnapshotStore.DiffPushdownCapKey]], row-group-pruned on a
+    *     compacted base), else a semi-join —
     *     cost O(window), never O(store).
     *   - **full diff** (a base entry in the window — compaction rewrote
     *     the file set): both versions' MOR reads aggregate to one
@@ -403,7 +470,7 @@ final class SnapshotStore(protected val spark: SparkSession,
       } else {
         val tombSchema = StructType(Seq(
           StructField("documentid", StringType)))
-        val touched = newEntries.map { e =>
+        lazy val touched = newEntries.map { e =>
           if (e.kind == "tombstone")
             spark.read.schema(tombSchema).parquet(s"$cdir/${e.path}")
           else spark.read.schema(tableSchema(collection))
@@ -421,17 +488,19 @@ final class SnapshotStore(protected val spark: SparkSession,
         // cap (a bulk window) the semi-join plan is the right one: a
         // driver-side IN list that size would bloat the plan, and the
         // scan is store-sized either way.
-        val cap = spark.conf.get(DiffPushdownCapKey, "1000").toInt
-        val probe = touched.limit(cap + 1).collect().map(_.getString(0))
+        val cap = pushdownCap
+        val recorded = Some(newEntries).filter(_.forall(_.ids.isDefined))
+          .map(_.flatMap(_.ids.get).distinct).filter(_.size <= cap)
+        val probe = recorded.getOrElse(
+          touched.limit(cap + 1).collect().map(_.getString(0)).toSeq)
         // New delta files that mention zero documentids (e.g. an empty
         // write) ⇒ provably no change — don't lean on isin()'s
         // empty-list-evaluates-false behavior to get there implicitly.
         if (probe.isEmpty) return emptyDiff()
-        if (probe.length <= cap) {
-          val ids = probe.toSeq
-          (checksums(readManifest(collection, m1, Some(ids)), "__c1"),
-            checksums(readManifest(collection, m2, Some(ids)), "__c2"))
-        } else
+        if (probe.length <= cap)
+          (checksums(readManifest(collection, m1, Some(probe)), "__c1"),
+            checksums(readManifest(collection, m2, Some(probe)), "__c2"))
+        else
           (checksums(readAt(collection, fromV)
               .join(touched, Seq("documentid"), "left_semi"), "__c1"),
             checksums(readAt(collection, toV)
@@ -472,11 +541,12 @@ final class SnapshotStore(protected val spark: SparkSession,
     * zero default would let an API caller's vacuum race an upsert that
     * has written its data dir but not yet published its manifest: the
     * staged dir would be swept as an "orphan" and the upsert's commit
-    * would land a manifest referencing deleted files. Returns (data
-    * dirs deleted, data dirs live). Live content is untouched by
-    * construction — every kept manifest's whole file set is retained,
-    * so reads at every retained version are byte-identical before and
-    * after.
+    * would land a manifest referencing deleted files. The ANN sidecars'
+    * unpublished file groups age out under the same grace
+    * ([[ChunkStore.sweepSidecars]]). Returns (data dirs deleted, data
+    * dirs live). Live content is untouched by construction — every
+    * kept manifest's whole file set is retained, so reads at every
+    * retained version are byte-identical before and after.
     *
     * READER contract: a reader still holding a [[readAt]] plan for an
     * AGED-OUT version fails LOUDLY at materialization (Spark's scan
@@ -522,6 +592,7 @@ final class SnapshotStore(protected val spark: SparkSession,
     if (f.exists(staged)) f.listStatus(staged).foreach { st =>
       if (now - st.getModificationTime >= minAgeMs) f.delete(st.getPath, false)
     }
+    sweepSidecars(collection, minAgeMs)
     (deleted, live)
   }
 
@@ -560,10 +631,13 @@ object SnapshotStore {
     */
   val CasCreateSchemesKey = "graft.snapshot.cas.create.schemes"
 
-  /** Spark-conf key: max touched-documentid count [[SnapshotStore.changedDocuments]]
-    * ships as a literal IN filter into both versions' scans (the
-    * row-group-pruned fast path); windows touching more ids fall back
-    * to the semi-join plan. Default 1000.
+  /** Spark-conf key: the store's largest literal IN list, default 1000.
+    * It bounds the documentids a delta or tombstone entry records in
+    * its manifest (an entry with more records none, and reads over it
+    * take the shuffle arbitration), and the touched-documentid count
+    * [[SnapshotStore.changedDocuments]] ships as a literal IN filter
+    * into both versions' scans (the row-group-pruned fast path);
+    * windows touching more ids fall back to the semi-join plan.
     */
   val DiffPushdownCapKey = "graft.snapshot.diff.pushdown.cap"
 
@@ -589,23 +663,33 @@ object SnapshotStore {
 
   /** One manifest entry: a data directory (relative to the collection)
     * plus how its rows participate in merge-on-read. `seq` is the
-    * version that committed it — the arbitration order.
+    * version that committed it — the arbitration order. `ids` are the
+    * sorted documentids a delta or tombstone mentions, None for a base,
+    * for an entry with more than [[DiffPushdownCapKey]] of them, and for
+    * entries committed before manifests recorded them.
     */
-  final case class Entry(path: String, kind: String, seq: Long)
+  final case class Entry(path: String, kind: String, seq: Long,
+      ids: Option[Seq[String]] = None)
 
   /** Version N of a collection IS this file's content: the entry list,
     * its parent version, and the op that produced it (audit trail).
-    * Serialized by hand (sorted keys, no reflection) — the manifest is
-    * the store's durability contract, so its byte format must not
-    * depend on library serializer defaults.
+    * Serialized from an explicit JSON tree (sorted keys, `ids` only
+    * when present, no reflection) — the manifest is the store's
+    * durability contract, so its byte format must not depend on
+    * library serializer defaults; a manifest without ids serializes
+    * exactly as before entries could carry them.
     */
   final case class Manifest(version: Long, parent: Long, op: String,
       entries: Seq[Entry]) {
     def toJson: String = {
-      val es = entries.map(e =>
-        s"""{"kind":"${e.kind}","path":"${e.path}","seq":${e.seq}}""")
-        .mkString("[", ",", "]")
-      s"""{"entries":$es,"op":"$op","parent":$parent,"version":$version}"""
+      import org.json4s._
+      val es = entries.toList.map(e => JObject(e.ids.map(ids =>
+          "ids" -> JArray(ids.toList.map(JString(_)))).toList ++
+        List("kind" -> JString(e.kind), "path" -> JString(e.path),
+          "seq" -> JLong(e.seq))))
+      org.json4s.jackson.JsonMethods.compact(JObject(
+        "entries" -> JArray(es), "op" -> JString(op),
+        "parent" -> JLong(parent), "version" -> JLong(version)))
     }
   }
 
@@ -620,7 +704,8 @@ object SnapshotStore {
         (j \ "op").extract[String],
         (j \ "entries").extract[Seq[JValue]].map { e =>
           Entry((e \ "path").extract[String], (e \ "kind").extract[String],
-            (e \ "seq").extract[Long])
+            (e \ "seq").extract[Long],
+            (e \ "ids").toOption.map(_.extract[List[String]]))
         })
     }
   }

@@ -316,6 +316,40 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(retainedInFlight.count() == 3L)
   }
 
+  test("vacuum sweeps sidecar file groups no manifest names (a crashed " +
+      "refresh), under the same grace, and never a live one") {
+    val root = Files.createTempDirectory("graft-snap-sidecar-vac").toString
+    val st = new SnapshotStore(spark, root, 4)
+    st.upsert(chunksOf("a", "d1" -> 2, "d2" -> 2), "c")
+    Seq("lsh", "ivfsq").foreach(st.buildIndex("c", _))
+    st.upsert(chunksOf("b", "d2" -> 1), "c")
+    Seq("lsh", "ivfsq").foreach(st.refreshIndex("c", _, Seq("d2")))
+    // The crash: a refresh wrote its code group and died before the
+    // manifest publish.
+    val crashed = s"$root/c/_index/lsh/delta-crashed0000000"
+    spark.range(3).toDF("key").write.parquet(crashed)
+    def dir(p: String) = java.nio.file.Paths.get(p)
+    val liveGroups = Seq("lsh", "ivfsq").flatMap(m =>
+      ChunkStore.latestSidecar(spark, s"$root/c/_index/$m").get.groups
+        .map(g => s"$root/c/_index/$m/${g.path}"))
+    assert(liveGroups.size == 4 && liveGroups.forall(g => Files.exists(dir(g))))
+    st.vacuum("c", retainLast = 1, minAgeMs = 3600000L)
+    assert(Files.exists(dir(crashed)),
+      "a fresh unpublished group is inside the in-flight grace window")
+    st.vacuum("c", retainLast = 1, minAgeMs = 0L)
+    assert(!Files.exists(dir(crashed)), "the crashed group must be swept")
+    assert(liveGroups.forall(g => Files.exists(dir(g))),
+      "vacuum must never touch a group the manifest names")
+    for (m <- Seq("lsh", "ivfsq")) {
+      assert(st.hasFreshIndex("c", m), m)
+      val answer = st.search("c", "1.0 0.0", k = 2,
+        provider = new graft.functions.VectorLiteralProvider(2), mode = m)
+      assert(answer.inputFiles.exists(_.contains("/_index/")),
+        s"$m must still serve from the sidecar")
+      assert(answer.count() == 2L, m)
+    }
+  }
+
   test("vacuum's library default keeps the 1h in-flight grace window " +
       "(sweeping staged-but-uncommitted data is an explicit opt-in)") {
     val root = Files.createTempDirectory("graft-snap-grace").toString

@@ -11,9 +11,13 @@ import org.apache.spark.sql.functions._
   *
   *   - building `read(c)` launches no job: the table schema comes from
   *     a parquet footer on the driver, not from schema inference;
+  *   - an exact search between compactions costs no more jobs than
+  *     after one: the manifest's documentids arbitrate merge-on-read
+  *     on the driver;
   *   - an incremental sidecar refresh reads the Δ documents once for
-  *     both modes and writes only Δ's codes, so the second mode's call
-  *     is its one delta write;
+  *     both modes, in the first mode's one delta write, and writes
+  *     only Δ's codes, so the second mode's call is its one delta
+  *     write;
   *   - a compaction re-stamps the sidecars itself, leaving the
   *     follow-up empty refresh nothing to do;
   *   - the first sidecar search after a refresh reloads the serving memo
@@ -63,9 +67,28 @@ class StoreJobCountSpec extends SparkSpec {
       assert(df.count() == 7 * 4)
     }
 
-  test("[snapshot] a 10-document write refreshes both sidecars in at most " +
-      "9 jobs, the second mode's call is one job, and the post-compaction " +
-      "re-stamp launches none") {
+  test("[snapshot] an exact search over 3 deltas and a tombstone launches " +
+      "no more jobs than after compaction") {
+    import spark.implicits._
+    val vs = newStore("snapshot")
+    vs.upsert(docs(0 until 40, 0).toDS().repartition(4), "c")
+    for (rev <- 1 to 3)
+      vs.upsert(docs(rev * 3 until rev * 3 + 4, rev).toDS(), "c")
+    vs.delete("c", Seq("d20"))
+    keysOf(vs, "exact", vec(7)) // warm
+    val (merged, morJobs) = JobCount(spark)(keysOf(vs, "exact", vec(7)))
+    vs.compact("c")
+    keysOf(vs, "exact", vec(7))
+    val (compacted, compactedJobs) =
+      JobCount(spark)(keysOf(vs, "exact", vec(7)))
+    info(s"exact search jobs: merge-on-read $morJobs, compacted $compactedJobs")
+    assert(merged == compacted)
+    assert(morJobs <= compactedJobs, s"the merge-on-read search launched " +
+      s"$morJobs jobs, the compacted one $compactedJobs")
+  }
+
+  test("[snapshot] a 10-document write refreshes both sidecars in one " +
+      "job per mode, and the post-compaction re-stamp launches none") {
     import spark.implicits._
     val vs = newStore("snapshot")
     vs.upsert(docs(0 until 40, 0).toDS().repartition(4), "c")
@@ -77,8 +100,9 @@ class StoreJobCountSpec extends SparkSpec {
     val (_, ivfsqJobs) =
       JobCount(spark)(vs.refreshIndex("c", "ivfsq", touched))
     info(s"refresh jobs: lsh $lshJobs, ivfsq $ivfsqJobs")
-    assert(lshJobs + ivfsqJobs <= 9,
-      s"the two refreshes launched $lshJobs + $ivfsqJobs jobs")
+    assert(lshJobs <= 1,
+      s"the first mode's refresh launched $lshJobs jobs, not its one " +
+        "delta write that also reads Δ")
     assert(ivfsqJobs == 1,
       s"the second mode's refresh launched $ivfsqJobs jobs, not its one " +
         "delta write")

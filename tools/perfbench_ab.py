@@ -13,6 +13,11 @@ It checks <base-ref> out in a `git worktree` (or uses --base-dir), then runs
 per workload. Each side builds into its own CARGO_TARGET_DIR inside its own
 checkout, so neither reuses the other's classes.
 
+With --out, each run's record also keeps its per-round latency samples (the
+`perfbench: samples` line of the run's jvm.log), so the rounds of one run can
+be read next to each other: on churn, the merge-on-read rounds and the round
+after compaction.
+
 It prints, per workload and end-to-end metric of BENCHMARK.json, the median
 and quartiles of each side, the share of pairs the change won, the relative
 change of the median and a verdict against the metric's bound:
@@ -40,8 +45,26 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 
+def samples(build_dir, workload, seed):
+    """The run's `perfbench: samples name=v,v,... ...` line as {name: [v, ...]}."""
+    log = os.path.join(build_dir, "out", f"{workload}-s{seed}-t0", "jvm.log")
+    try:
+        with open(log, errors="replace") as f:
+            lines = [l for l in f if l.startswith("perfbench: samples ")]
+    except OSError:
+        return {}
+    if not lines:
+        return {}
+    out = {}
+    for field in lines[-1].split()[2:]:
+        name, _, vals = field.partition("=")
+        out[name] = [float(v) for v in vals.split(",") if v]
+    return out
+
+
 def run(side_root, workload, seed, seconds):
-    env = dict(os.environ, CARGO_TARGET_DIR=os.path.join(side_root, ".bench_build"))
+    build_dir = os.path.join(side_root, ".bench_build")
+    env = dict(os.environ, CARGO_TARGET_DIR=build_dir)
     proc = subprocess.run(
         [sys.executable, os.path.join(side_root, "perfbench", "run.py"),
          "--workload", workload, "--seed", str(seed), "--seconds", str(seconds),
@@ -55,7 +78,8 @@ def run(side_root, workload, seed, seconds):
     res = json.loads(lines[-1])
     return {"correct": res["correct"], "attempted": res["attempted"],
             "failed": res["failed"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+            "samples": samples(build_dir, workload, seed)}
 
 
 def quartiles(vals):
